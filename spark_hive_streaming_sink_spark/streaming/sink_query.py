@@ -251,9 +251,10 @@ def sink_txnlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-expressed on the commit log; the provider seam is
     streaming/txnlog.py).
 
-    Scale: snapshot resolution is O(commits) driver-side metadata +
-    a parquet scan of only the selected files; the summaries are
-    single-pass aggregates."""
+    Scale: snapshot resolution reads each commit file once per
+    process (a warm refresh costs O(1) filesystem calls) and replays
+    the log in memory, then scans only the selected files; the
+    summaries are single-pass aggregates."""
     from .txnlog import (
         TxnLogTable,
         read_txnlog_table,

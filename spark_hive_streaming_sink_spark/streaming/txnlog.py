@@ -32,6 +32,15 @@ self-contained (no external runtime):
   version. This is optimistic concurrency, the isolation mechanism
   Hive ACID's metastore locks provide in the reference's world and the
   ``native`` provider only gets from its single-writer contract.
+- Every reader of a location shares one process-wide parsed copy of its
+  log (:class:`_LogState`), so a batch's idempotency check and commit
+  cost O(1) filesystem calls instead of re-reading every earlier
+  commit. This relies on commit files being IMMUTABLE once written:
+  nothing here rewrites or deletes one, so a version parsed once never
+  needs reading again. A refresh probes for versions past the cached
+  tip (versions are dense — every writer commits at tip + 1) and
+  re-stats the tip file; a missing or changed tip means the location
+  was dropped or recreated, and the state is rebuilt from one listing.
 
 Scale: a commit is ONE driver-side metadata write, O(1) in data size
 (vs the native provider's O(files-per-batch) renames); per-file
@@ -41,9 +50,15 @@ readers Delta-style data skipping without Hive partition directories
 composes with any partitioning upstream and avoids the small-files
 explosion of high-cardinality dynamic partitions).
 
-Exclusive-create atomicity holds on HDFS and POSIX filesystems; object
-stores without atomic create need a conditional-put/locking LogStore,
-the same deployment caveat Delta documents for S3.
+Exclusive-create atomicity: HDFS creates a file atomically in the
+namenode, so any number of writers may race. Hadoop 3.4.2's
+``RawLocalFileSystem.create(overwrite=false)`` is check-then-create
+(``exists()``, then open), so two PROCESSES can both claim one version
+on the local filesystem: a local table is safe for a single writing
+process only (writers within one process are serialized by the
+location's lock). Object stores without atomic create need a
+conditional-put/locking LogStore, the same deployment caveat Delta
+documents for S3.
 
 Reference parity: ``HiveStreamWriter.scala:39-41`` (the no-op epoch
 commit this replaces), ``HiveWriter.scala:79-138`` (the ACID
@@ -53,6 +68,7 @@ transaction lifecycle the commit file plays the role of).
 from __future__ import annotations
 
 import json
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,6 +83,44 @@ _DATA_DIR = "_shss_data"
 _COMMIT_RETRIES = 50
 
 
+class _LogState:
+    """The parsed commits of one log location, index = version, shared
+    by every :class:`TxnLogTable` in the process (the sink builds a new
+    one per batch). ``tip_stat`` is the ``(length, mtime)`` of the tip
+    commit file, or None when the state must be rebuilt from a listing."""
+
+    def __init__(self):
+        self.lock = threading.Lock()
+        self.commits: list[dict] = []
+        self.tip_stat: tuple[int, int] | None = None
+
+
+_STATES: dict[str, _LogState] = {}
+_STATES_LOCK = threading.Lock()
+
+
+def _state_for(location: str) -> _LogState:
+    with _STATES_LOCK:
+        return _STATES.setdefault(location, _LogState())
+
+
+def _batch_ids(commits: list[dict], app_id: str) -> set[int]:
+    return {c["batch_id"] for c in commits if c.get("app_id") == app_id}
+
+
+def _live_adds(commits: list[dict]) -> list[dict]:
+    """Replay commits in version order, applying ``remove`` lists
+    (compaction and merge commits retire the files they rewrote —
+    Delta's add/remove action model)."""
+    live: dict[str, dict] = {}
+    for c in commits:
+        for rel in c.get("remove", []):
+            live.pop(rel, None)
+        for a in c.get("add", []):
+            live[a["path"]] = a
+    return list(live.values())
+
+
 class TxnLogTable:
     """Commit log + snapshot resolution for one table location."""
 
@@ -75,21 +129,34 @@ class TxnLogTable:
         self.location = location.rstrip("/")
         self._jvm = spark.sparkContext._jvm
         self._hconf = spark.sparkContext._jsc.hadoopConfiguration()
+        self._state = _state_for(self.location)
+        # resolved once: each py4j class lookup is a JVM round trip, and
+        # a warm refresh is only a handful of calls
+        self._jpath = self._jvm.org.apache.hadoop.fs.Path
+        self._jfs = None
 
     # -- Hadoop FS plumbing (works on any DFS, same as the native
     #    provider's StagedBatchPublisher) --------------------------------
     def _path(self, s: str):
-        return self._jvm.org.apache.hadoop.fs.Path(s)
+        return self._jpath(s)
 
     def _fs(self):
-        return self._path(self.location).getFileSystem(self._hconf)
+        if self._jfs is None:
+            self._jfs = self._path(self.location).getFileSystem(self._hconf)
+        return self._jfs
 
     def _log_path(self, version: int) -> str:
         return f"{self.location}/{_LOG_DIR}/{version:020d}.json"
 
-    # -- log reading -----------------------------------------------------
-    def versions(self) -> list[int]:
-        fs = self._fs()
+    def _stat(self, fs, version: int) -> tuple[int, int] | None:
+        p = self._path(self._log_path(version))
+        if not fs.exists(p):
+            return None
+        st = fs.getFileStatus(p)
+        return st.getLen(), st.getModificationTime()
+
+    def _listed_versions(self, fs) -> list[int]:
+        """Every version in the log directory; they must be dense from 0."""
         log_dir = self._path(f"{self.location}/{_LOG_DIR}")
         if not fs.exists(log_dir):
             return []
@@ -98,39 +165,97 @@ class TxnLogTable:
             name = st.getPath().getName()
             if name.endswith(".json"):
                 out.append(int(name[: -len(".json")]))
-        return sorted(out)
+        out.sort()
+        for expected, v in enumerate(out):
+            if v != expected:
+                raise TxnLogError(
+                    f"version gap in the commit log at {self.location}: "
+                    f"version {expected} is missing (next present: {v})"
+                )
+        return out
 
+    # -- log reading -----------------------------------------------------
     def read_commit(self, version: int) -> dict:
+        """Read one commit file — the only read of the log from the
+        filesystem; everything else goes through :meth:`commits`."""
         fs = self._fs()
         stream = fs.open(self._path(self._log_path(version)))
-        raw = self._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        stream.close()
-        return json.loads(raw)
+        try:
+            raw = self._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+        try:
+            commit = json.loads(raw)
+        except ValueError:
+            commit = None
+        if not isinstance(commit, dict):
+            raise TxnLogError(
+                f"torn or corrupt commit file for version {version} at "
+                f"{self.location} ({len(raw)} bytes): a writer died between "
+                "creating and closing it, or it was edited by hand"
+            )
+        return commit
 
     def commits(self) -> list[dict]:
-        return [self.read_commit(v) for v in self.versions()]
+        """Every commit, index = version (treat the dicts as read-only:
+        they are shared by every reader in the process). Refreshes the
+        location's state first: only versions past the cached tip are
+        read; a missing or changed tip file rebuilds it from a listing."""
+        st = self._state
+        with st.lock:
+            fs = self._fs()
+            tip = len(st.commits) - 1
+            if st.tip_stat is None or self._stat(fs, tip) != st.tip_stat:
+                st.commits, st.tip_stat = [], None
+                new = self._listed_versions(fs)
+            else:
+                new = []
+                v = len(st.commits)
+                while fs.exists(self._path(self._log_path(v))):
+                    new.append(v)
+                    v += 1
+            if new:
+                # read all before caching any: a torn file caches nothing
+                read = [self.read_commit(v) for v in new]
+                st.commits.extend(read)
+                st.tip_stat = self._stat(fs, new[-1])
+                if st.tip_stat is None:  # deleted under us: rebuild next time
+                    st.commits = []
+            return list(st.commits)
+
+    def versions(self) -> list[int]:
+        return list(range(len(self.commits())))
 
     def committed_batch_ids(self, app_id: str) -> set[int]:
         """The idempotency check — Delta's txn appId/version lookup."""
-        return {
-            c["batch_id"] for c in self.commits() if c.get("app_id") == app_id
-        }
+        return _batch_ids(self.commits(), app_id)
 
     # -- committing ------------------------------------------------------
     def try_commit(self, version: int, commit: dict) -> bool:
         """Exclusive-create the commit file; False on version collision
-        (another writer — or this writer's pre-crash attempt — owns it)."""
+        (another writer — or this writer's pre-crash attempt — owns it).
+        ``version`` is the tip + 1 of a fresh :meth:`commits`. The file
+        is written under the location's lock, so no reader in this
+        process sees it half-written, and a winning commit joins the
+        state without being read back."""
         fs = self._fs()
-        fs.mkdirs(self._path(f"{self.location}/{_LOG_DIR}"))
-        target = self._path(self._log_path(version))
-        try:
-            out = fs.create(target, False)  # overwrite=False: atomic claim
-        except Exception:
-            return False
-        body = dict(commit)
-        body["version"] = version
-        out.write(bytearray(json.dumps(body).encode("utf-8")))
-        out.close()
+        target = self._path(self._log_path(version))  # create makes parents
+        payload = json.dumps({**commit, "version": version})
+        st = self._state
+        with st.lock:
+            try:
+                out = fs.create(target, False)  # overwrite=False: atomic claim
+            except Exception:
+                return False
+            try:
+                out.write(bytearray(payload.encode("utf-8")))
+            finally:
+                out.close()
+            if len(st.commits) == version:
+                stat = self._stat(fs, version)
+                if stat is not None:
+                    st.commits.append(json.loads(payload))
+                    st.tip_stat = stat
         return True
 
     def append_commit(self, app_id: str, batch_id: int, add: list[dict]) -> int | None:
@@ -138,10 +263,10 @@ class TxnLogTable:
         version, or None when (app_id, batch_id) is already in the log
         (idempotent replay — nothing to do)."""
         for _ in range(_COMMIT_RETRIES):
-            vs = self.versions()
-            if batch_id in self.committed_batch_ids(app_id):
+            commits = self.commits()
+            if batch_id in _batch_ids(commits, app_id):
                 return None
-            next_v = (vs[-1] + 1) if vs else 0
+            next_v = len(commits)
             if self.try_commit(
                 next_v, {"app_id": app_id, "batch_id": batch_id, "add": add}
             ):
@@ -156,22 +281,15 @@ class TxnLogTable:
 
     # -- snapshot reads ----------------------------------------------------
     def snapshot_adds(self, as_of_version: int | None = None) -> list[dict]:
-        """The LIVE add actions: replay commits in version order,
-        applying ``remove`` lists (compaction commits retire the files
-        they rewrote — Delta's add/remove action model).
+        """The LIVE add actions (see :func:`_live_adds`).
         ``as_of_version`` replays only commits up to that version —
         TIME TRAVEL, free because the log is immutable; a historical
         snapshot stays readable until vacuum reclaims files the CURRENT
         snapshot no longer references."""
-        live: dict[str, dict] = {}
-        for c in self.commits():
-            if as_of_version is not None and c["version"] > as_of_version:
-                break
-            for rel in c.get("remove", []):
-                live.pop(rel, None)
-            for a in c.get("add", []):
-                live[a["path"]] = a
-        return list(live.values())
+        commits = self.commits()
+        if as_of_version is not None:
+            commits = commits[: max(as_of_version + 1, 0)]
+        return _live_adds(commits)
 
     def snapshot_files(
         self,
@@ -278,26 +396,10 @@ class TxnLogPublisher:
         # collides with (or resumes) the dead attempt's files — those
         # stay unreferenced by any commit, hence invisible, until vacuum
         rel_dir = f"{_DATA_DIR}/b{batch_id}-{uuid.uuid4().hex[:12]}"
-        out_dir = f"{log.location}/{rel_dir}"
-        aligned.write.mode("errorifexists").format("parquet").save(out_dir)
-        fs = log._fs()
-        out_q = fs.makeQualified(log._path(out_dir)).toString()
-        add: list[dict] = []
-        it = fs.listFiles(log._path(out_dir), True)
-        while it.hasNext():
-            st = it.next()
-            p = st.getPath()
-            if p.getName().startswith(("_", ".")):
-                continue
-            rel = fs.makeQualified(p).toString()[len(out_q) :].lstrip("/")
-            entry: dict = {
-                "path": f"{rel_dir}/{rel}",
-                "size": st.getLen(),
-            }
-            stats = _file_stats(f"{log.location}/{rel_dir}/{rel}", self.part_cols)
-            if stats:
-                entry["stats"] = stats
-            add.append(entry)
+        aligned.write.mode("errorifexists").format("parquet").save(
+            f"{log.location}/{rel_dir}"
+        )
+        add = _list_add_entries(log, rel_dir, self.part_cols)
         version = log.append_commit(self.scope, batch_id, add)
         return {
             "n_files": len(add),
@@ -406,41 +508,26 @@ def compact_txnlog_table(
     old_rel = [a["path"] for a in adds]
     files = [f"{log.location}/{p}" for p in old_rel]
     rel_dir = f"{_DATA_DIR}/compact-{uuid.uuid4().hex[:12]}"
-    out_dir = f"{log.location}/{rel_dir}"
     (
         spark.read.schema(schema)
         .parquet(*files)
         .repartition(n_out)
         .write.mode("errorifexists")
         .format("parquet")
-        .save(out_dir)
+        .save(f"{log.location}/{rel_dir}")
     )
-    fs = log._fs()
-    out_q = fs.makeQualified(log._path(out_dir)).toString()
-    new_add: list[dict] = []
-    it = fs.listFiles(log._path(out_dir), True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        if p.getName().startswith(("_", ".")):
-            continue
-        rel = fs.makeQualified(p).toString()[len(out_q) :].lstrip("/")
-        entry: dict = {"path": f"{rel_dir}/{rel}", "size": st.getLen()}
-        stats = _file_stats(f"{log.location}/{rel_dir}/{rel}", part_cols or [])
-        if stats:
-            entry["stats"] = stats
-        new_add.append(entry)
+    new_add = _list_add_entries(log, rel_dir, part_cols or [])
     retire = set(old_rel)
     for _ in range(_COMMIT_RETRIES):
-        vs = log.versions()
-        live = {a["path"] for a in log.snapshot_adds()}
+        commits = log.commits()
+        live = {a["path"] for a in _live_adds(commits)}
         if not retire <= live:
             raise TxnLogError(
                 "concurrent compaction retired files this compaction was "
                 f"rewriting ({sorted(retire - live)[:3]}...); re-run against "
                 "the new snapshot"
             )
-        next_v = (vs[-1] + 1) if vs else 0
+        next_v = len(commits)
         if log.try_commit(
             next_v,
             {"compaction": True, "add": new_add, "remove": sorted(retire)},
@@ -466,8 +553,10 @@ def read_txnlog_table_changes(
     the returned frame, then durably store the watermark; a crash
     before the store replays the same closed version range.
 
-    Scale: resolving a poll is O(commits in the range) driver-side
-    metadata reads + a parquet scan of only the NEW files."""
+    Scale: resolving a poll reads only the commit files this process
+    has not read before (O(1) filesystem calls when the log did not
+    move; see :class:`_LogState`), replays the range in memory, and
+    scans only the NEW files."""
     from .sink import _table_location
 
     qualified = f"{db}.{table}"
@@ -476,15 +565,14 @@ def read_txnlog_table_changes(
     spark.catalog.refreshTable(qualified)
     schema = spark.table(qualified).schema
     log = TxnLogTable(spark, _table_location(spark, qualified))
-    versions = [v for v in log.versions() if v > since_version]
-    files: list[str] = []
-    high = since_version
-    for v in versions:
-        c = log.read_commit(v)
-        high = v
-        if c.get("compaction"):
-            continue  # rewrite, not new data
-        files.extend(f"{log.location}/{a['path']}" for a in c.get("add", []))
+    commits = log.commits()
+    files = [
+        f"{log.location}/{a['path']}"
+        for c in commits[max(since_version + 1, 0) :]
+        if not c.get("compaction")  # rewrite, not new data
+        for a in c.get("add", [])
+    ]
+    high = max(since_version, len(commits) - 1)
     if not files:
         return spark.createDataFrame([], schema), high
     return spark.read.schema(schema).parquet(*files), high
@@ -604,8 +692,8 @@ def merge_txnlog_table(
         > 0
     )
     for _ in range(_COMMIT_RETRIES):
-        vs = log.versions()
-        live = {a["path"] for a in log.snapshot_adds()}
+        commits = log.commits()
+        live = {a["path"] for a in _live_adds(commits)}
         if not retire <= live:
             raise TxnLogError(
                 "concurrent commit retired files this merge was rewriting "
@@ -637,7 +725,7 @@ def merge_txnlog_table(
                     "...); re-run the merge against the new snapshot"
                 )
             snap0 = live  # probed clean — don't re-probe these files
-        next_v = (vs[-1] + 1) if vs else 0
+        next_v = len(commits)
         if log.try_commit(
             next_v,
             {"merge": True, "add": new_add, "remove": sorted(retire)},

@@ -442,18 +442,14 @@ def test_txnlog_additive_schema_evolution(spark):
     assert by_note == {None: n, "v2": n}
 
 
-def test_txnlog_multi_microbatch_single_query(spark, tmp_path):
-    """Several micro-batches within ONE query (maxFilesPerTrigger=1
-    over a 3-file source) commit as distinct (app_id, batch 0/1/2)
-    versions — the normal continuous-ingest shape, vs the single-batch
-    availableNow used elsewhere."""
+def _stream_three_batches(spark, tmp_path, table, base) -> int:
+    """Stream a 3-file source at maxFilesPerTrigger=1 (three
+    micro-batches, disjoint event ids) into ``table``; returns the rows
+    per batch."""
     import pyspark.sql.functions as F
 
-    table, loc, base = _mk_table(spark)
     src = str(tmp_path / "src")
     ev = _events_batch(spark)
-    n = ev.count()
-    # three separate files -> three micro-batches at maxFilesPerTrigger=1
     for i in range(3):
         ev.withColumn("event_id", F.col("event_id") + i * 10_000_000).coalesce(
             1
@@ -474,6 +470,16 @@ def test_txnlog_multi_microbatch_single_query(spark, tmp_path):
         **{"table.format": "txnlog"},
     )
     q.awaitTermination()
+    return ev.count()
+
+
+def test_txnlog_multi_microbatch_single_query(spark, tmp_path):
+    """Several micro-batches within ONE query (maxFilesPerTrigger=1
+    over a 3-file source) commit as distinct (app_id, batch 0/1/2)
+    versions — the normal continuous-ingest shape, vs the single-batch
+    availableNow used elsewhere."""
+    table, loc, base = _mk_table(spark)
+    n = _stream_three_batches(spark, tmp_path, table, base)
     log = TxnLogTable(spark, loc)
     commits = log.commits()
     assert sorted(c["batch_id"] for c in commits) == [0, 1, 2]
@@ -481,6 +487,189 @@ def test_txnlog_multi_microbatch_single_query(spark, tmp_path):
     snap = read_txnlog_table(spark, "default", table)
     assert snap.count() == 3 * n
     assert snap.dropDuplicates(["event_id"]).count() == 3 * n
+
+
+def test_txnlog_reads_each_commit_once(spark, tmp_path, monkeypatch):
+    """The log state reads every commit file at most once per process:
+    the writer never reads back its own commits or re-reads earlier
+    ones, and a reader with no state (a fresh process) reads each
+    version exactly once however many snapshots it resolves."""
+    import collections
+
+    from spark_hive_streaming_sink_spark.streaming import txnlog as T
+
+    calls = collections.Counter()
+    orig = T.TxnLogTable.read_commit
+
+    def counting(self, version):
+        calls[version] += 1
+        return orig(self, version)
+
+    monkeypatch.setattr(T.TxnLogTable, "read_commit", counting)
+    table, loc, base = _mk_table(spark)
+    n = _stream_three_batches(spark, tmp_path, table, base)
+    assert calls == {}
+    monkeypatch.setattr(T, "_STATES", {})
+    for _ in range(3):
+        assert read_txnlog_table(spark, "default", table).count() == 3 * n
+    assert calls == {0: 1, 1: 1, 2: 1}
+
+
+def test_txnlog_commit_written_outside_the_state_is_seen(spark):
+    """A commit file written by another process (here: plain ``open()``)
+    appears in the next idempotency check and snapshot, and the next
+    append lands after it."""
+    import json
+
+    table, loc, base = _mk_table(spark)
+    batch = _events_batch(spark).coalesce(1)
+    n = batch.count()
+    TxnLogPublisher(spark, f"default.{table}", [], "me", loc).publish(batch, 0)
+    log = TxnLogTable(spark, loc)
+    assert log.committed_batch_ids("foreign") == set()
+
+    batch.write.parquet(f"{loc}/_shss_data/foreign")
+    parts = sorted(
+        f for f in os.listdir(f"{loc}/_shss_data/foreign") if f.endswith(".parquet")
+    )
+    add = [
+        {"path": f"_shss_data/foreign/{f}",
+         "size": os.path.getsize(f"{loc}/_shss_data/foreign/{f}")}
+        for f in parts
+    ]
+    with open(f"{loc}/_shss_txnlog/{1:020d}.json", "w") as f:
+        json.dump({"app_id": "foreign", "batch_id": 7, "add": add, "version": 1}, f)
+
+    assert log.committed_batch_ids("foreign") == {7}
+    assert read_txnlog_table(spark, "default", table).count() == 2 * n
+    assert log.append_commit("me", 1, []) == 2
+    assert log.versions() == [0, 1, 2]
+
+
+def test_txnlog_recreated_location_shows_only_new_rows(spark):
+    """Drop the table, ``rm -r`` its location and stream into a fresh
+    table at the same path: a reader whose state still holds the old log
+    notices the changed tip file and rebuilds, so it sees only the new
+    rows."""
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    table, loc, base = _mk_table(spark)
+    ev = stream_table(spark, SF_DIR, "events").select(
+        "event_id", "user_id", "value", "event_type"
+    )
+    write_stream_to_table(
+        ev, checkpoint_dir=f"{base}/ckpt_a", db="default", table=table,
+        **{"table.format": "txnlog"},
+    ).awaitTermination()
+    n_all = _events_batch(spark).count()
+    assert read_txnlog_table(spark, "default", table).count() == n_all
+    log = TxnLogTable(spark, loc)  # a second state key for the same log
+    assert log.versions() == [0]
+
+    spark.sql(f"DROP TABLE {table}")
+    shutil.rmtree(loc)
+    spark.sql(
+        f"CREATE TABLE {table} (event_id BIGINT, user_id BIGINT, value DOUBLE, "
+        f"event_type STRING) USING PARQUET LOCATION '{loc}'"
+    )
+    write_stream_to_table(
+        ev.filter(F.col("event_type") == "click"),
+        checkpoint_dir=f"{base}/ckpt_b", db="default", table=table,
+        **{"table.format": "txnlog"},
+    ).awaitTermination()
+    n_click = _events_batch(spark).filter(F.col("event_type") == "click").count()
+    assert 0 < n_click < n_all
+    assert read_txnlog_table(spark, "default", table).count() == n_click
+    schema = spark.table(table).schema
+    assert log.snapshot(schema).count() == n_click
+    assert log.versions() == [0]
+
+
+def test_txnlog_version_gap_raises(spark, tmp_path):
+    """Versions are dense by construction; a listing that finds a gap
+    refuses to guess which commits are missing."""
+    import json
+
+    from spark_hive_streaming_sink_spark.streaming.txnlog import TxnLogError
+
+    loc = str(tmp_path / "tbl")
+    os.makedirs(f"{loc}/_shss_txnlog")
+    for v in (0, 2):
+        with open(f"{loc}/_shss_txnlog/{v:020d}.json", "w") as f:
+            json.dump({"app_id": "a", "batch_id": v, "add": [], "version": v}, f)
+    with pytest.raises(TxnLogError, match="version 1 is missing"):
+        TxnLogTable(spark, loc).versions()
+
+
+def test_txnlog_torn_commit_raises_and_is_never_cached(spark, tmp_path):
+    """A writer that dies between creating and closing its commit file
+    leaves it empty: every read of the log raises TxnLogError naming the
+    version (not a bare JSON error) until the file is repaired, and the
+    state never caches it."""
+    import json
+
+    from spark_hive_streaming_sink_spark.streaming.txnlog import TxnLogError
+
+    loc = str(tmp_path / "tbl")
+    log = TxnLogTable(spark, loc)
+    assert log.try_commit(0, {"app_id": "a", "batch_id": 0, "add": []})
+    torn = f"{loc}/_shss_txnlog/{1:020d}.json"
+    open(torn, "w").close()
+    for _ in range(2):
+        with pytest.raises(TxnLogError, match="version 1 "):
+            log.committed_batch_ids("a")
+    with pytest.raises(TxnLogError, match="version 1 "):
+        log.append_commit("a", 1, [])
+    with open(torn, "w") as f:
+        json.dump({"app_id": "a", "batch_id": 1, "add": [], "version": 1}, f)
+    assert log.committed_batch_ids("a") == {0, 1}
+
+
+def test_txnlog_concurrent_writers_share_state(spark, tmp_path, monkeypatch):
+    """Eight writer threads, each with its own TxnLogTable on one
+    location, under a short switch interval: every (app, batch) commits
+    exactly once at dense versions, replays are skipped, and the shared
+    state equals a fresh listing of the log."""
+    import sys
+    import threading
+
+    from spark_hive_streaming_sink_spark.streaming import txnlog as T
+
+    loc = str(tmp_path / "tbl")
+    # 32 commits in all: fewer than the commit loop's 50 retries, so no
+    # writer can lose every race and fail with a contention error
+    n_threads, n_batches = 8, 4
+    results: dict[str, list] = {}
+
+    def writer(app):
+        log = T.TxnLogTable(spark, loc)
+        results[app] = [log.append_commit(app, b, []) for b in range(n_batches)]
+        results[app].append(log.append_commit(app, 0, []))  # replay
+
+    threads = [
+        threading.Thread(target=writer, args=(f"app{i}",)) for i in range(n_threads)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert all(r[-1] is None for r in results.values()), "replay must be skipped"
+    won = sorted(v for r in results.values() for v in r[:-1])
+    assert won == list(range(n_threads * n_batches))
+    shared = T.TxnLogTable(spark, loc).commits()
+    monkeypatch.setattr(T, "_STATES", {})
+    assert T.TxnLogTable(spark, loc).commits() == shared
+    assert sorted((c["app_id"], c["batch_id"]) for c in shared) == sorted(
+        (f"app{i}", b) for i in range(n_threads) for b in range(n_batches)
+    )
 
 
 def test_txnlog_merge_rewrites_only_touched_files(spark):
